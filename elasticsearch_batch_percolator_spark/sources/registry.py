@@ -799,14 +799,6 @@ class CompiledRegistry:
             if not q.match_none and (q.groups is None or len(q.groups) == 0)
         ]
 
-    def verify_plans(self) -> dict[str, Plan]:
-        """query_id -> exact plan, for queries needing phase-2."""
-        return {
-            q.query_id: q.plan
-            for q in self.queries.values()
-            if q.needs_verify and not q.match_none
-        }
-
     def gate_verify_ids(self) -> list[str]:
         """Ids of queries needing phase-2 under GATED phase 1 (one group
         per query): every query whose match isn't implied by its gate group
@@ -822,11 +814,6 @@ class CompiledRegistry:
                 or (q.groups is not None and len(q.groups) > 1)
             )
         ]
-
-    def gate_verify_plans(self) -> dict[str, Plan]:
-        """Phase-2 plans for ``gate_verify_ids`` — MATERIALIZES blob-backed
-        plans; planner paths that only need ids should use the id form."""
-        return {qid: self.queries[qid].plan for qid in self.gate_verify_ids()}
 
     def gates(
         self, term_df: dict[tuple[str, str], int] | None = None

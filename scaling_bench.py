@@ -466,7 +466,7 @@ def main() -> None:
             )
             lines.append(
                 f"| {name} | {thr[str(lo)]} | {thr[str(hi)]} | "
-                f"{eff}{cpu_note} |"
+                f"{'—' if eff is None else eff}{cpu_note} |"
             )
         lines += [
             "",

@@ -55,6 +55,9 @@ for it in range(6):
         idf = math.log(1.0 + (n - dfv + 0.5) / (dfv + 0.5))
         return idf * (tf * (BM25_K1 + 1.0)) / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dls[doc_i] / avgdl))
 
+    # the per-(field, term) sum below is per-column only while RESOLVE is
+    # injective (no two fields share a token column)
+    assert len(set(RESOLVE.values())) == len(RESOLVE)
     exp = {}
     matched_q = {q for (_, q) in got}
     for i, f1, f2, num, kids in docs:

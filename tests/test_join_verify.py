@@ -293,7 +293,7 @@ def test_space_bearing_term_value_rejected_and_guarded(spark):
         (),
     )
     reg.jv_verify_atoms = lambda: atoms
-    specs, _, _, _ = _jv_structs(
+    specs, _, _ = _jv_structs(
         reg, {"text": "text"}, {"text": 70}, set(), set(), ["text"]
     )
     assert "sp" not in specs  # routed to the python lane
@@ -302,13 +302,11 @@ def test_space_bearing_term_value_rejected_and_guarded(spark):
 
 def test_est_q_equals_atom_df_reference():
     """The flat inlined jv cost-model pass (_est_q) must equal the per-atom
-    reference (_atom_df) over every atom kind: token, n-gram (with and
-    without an exact probe entry), wildcard, wildcard-gram — on randomized
-    stats dicts including absent keys."""
+    reference (_atom_df) over every atom kind: token, n-gram, wildcard,
+    wildcard-gram — on randomized stats dicts including absent keys."""
     import random
 
     from elasticsearch_batch_percolator_spark.operators.percolate import (
-        _GRAM_FCOL_OFF,
         _atom_df,
         _est_q,
         _jv_structs,
@@ -336,23 +334,18 @@ def test_est_q_equals_atom_df_reference():
                 "producers": [{"term": {"content": rng.choice(vocab)}},
                               {"wildcard": {"content": rng.choice(vocab)[:2] + "*"}}]}}))
     reg = CompiledRegistry.from_rows(rows)
-    specs, _, gram_probe, _ = _jv_structs(
+    specs, _, _ = _jv_structs(
         reg, {"content": "tokens"}, {"tokens": 0}, set(), set(), ["tokens"]
     )
     assert specs, "no jv-eligible queries — test is vacuous"
     kinds = {k for s in specs.values() for _, k, _ in s[2]}
     assert {"t"} < kinds, kinds  # several atom kinds exercised
 
-    # randomized stats: some keys present, some absent (df defaults to 0);
-    # HALF the gram atoms get an exact probed entry, half fall back to the
-    # min-unigram bound
+    # randomized stats: some keys present, some absent (df defaults to 0)
     col_df = {}
     for w in vocab:
         if rng.random() < 0.7:
             col_df[(0, w)] = rng.randint(0, 500)
-    for j, (fc, n, v) in enumerate(sorted(gram_probe)):
-        if j % 2 == 0:
-            col_df[(fc + _GRAM_FCOL_OFF * (n - 1), v)] = rng.randint(0, 50)
     jv_pat_df = {}
     for s in specs.values():
         for _qid, fc, n, _pre, like, _suf, _req in s[5]:
